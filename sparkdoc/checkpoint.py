@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkdoc.schemas import METRICS
+from sparkdoc.session import local_frame
 
 
 def with_bucket(df: DataFrame, n_buckets: int, key: str = "doc_id") -> DataFrame:
@@ -70,7 +71,8 @@ def commit_bucket_group(
     manifest stays consistent because readers key on whole files)."""
     path = manifest_path(out_dir)
     tmp = os.path.join(out_dir, f"_manifest_tmp_{uuid.uuid4().hex}")
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [
             (
                 job_id,
@@ -118,8 +120,6 @@ def _check_or_record_params(spark: SparkSession, out_dir: str, **params) -> None
     data. First run records the partitioning params next to the manifest;
     any later run must match or gets a hard error (fresh out_dir to change
     them)."""
-    import json as _json
-
     from sparkdoc.io import fs_exists
 
     # absence = first run; an EXISTING-but-unreadable params file must
@@ -139,9 +139,11 @@ def _check_or_record_params(spark: SparkSession, out_dir: str, **params) -> None
     else:
         prior = None
     if prior is None:
-        spark.createDataFrame([(_json.dumps(params),)], "v string").selectExpr(
-            "from_json(v, 'n_buckets int, chunk boolean') as p"
-        ).select("p.*").coalesce(1).write.mode("overwrite").json(_params_path(out_dir))
+        local_frame(
+            spark,
+            [(int(params["n_buckets"]), bool(params["chunk"]))],
+            "n_buckets int, chunk boolean",
+        ).coalesce(1).write.mode("overwrite").json(_params_path(out_dir))
         return
     mismatched = {
         k: (prior.get(k), v) for k, v in params.items() if prior.get(k) != v
@@ -246,10 +248,13 @@ def run_resumable(
     try:
         fut = pool.submit(_prepare, groups[0]) if pool else None
         for idx, group in enumerate(groups):
-            t0 = time.monotonic()
             docs, docs_b, prep_ms = (
                 fut.result() if fut is not None else _prepare(group)
             )
+            # the loop timer starts once the prepared group is in hand:
+            # prep_ms already holds the parse, so timing the wait (or the
+            # un-prefetched _prepare) here too would count it twice
+            t0 = time.monotonic()
             fut = None
             if pool and idx + 1 < len(groups):
                 fut = pool.submit(_prepare, groups[idx + 1])

@@ -214,7 +214,10 @@ def chunk_spans(
             {
                 "chunk_id": len(chunks),
                 "text": enriched,
-                "token_count": count_tokens(enriched),
+                # exact without re-tokenizing: the pre-split regex never
+                # crosses the "\n" joins (and str.lower's final-sigma rule
+                # stops at them), so counts add up across the parts
+                "token_count": trail_tokens() + sum(u["tokens"] for u in units),
                 "page_numbers": pages,
                 "doc_item_refs": refs,
                 "headings": heads,

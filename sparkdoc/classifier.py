@@ -34,6 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparkdoc.session import local_frame
 from sparkdoc.textops import words
 
 
@@ -93,8 +94,8 @@ def train_logreg(
     w = np.zeros(n_buckets, dtype=np.float64)
     bias = 0.0
     for _ in range(iters):
-        wdf = spark.createDataFrame(
-            [(int(i), float(w[i])) for i in np.nonzero(w)[0]], "bucket bigint, w double"
+        wdf = local_frame(
+            spark, [(int(i), float(w[i])) for i in np.nonzero(w)[0]], "bucket bigint, w double"
         )
         margins = (
             feats.join(F.broadcast(wdf), "bucket", "left")
@@ -162,8 +163,8 @@ def score_quantized(
                 "score_quantized: pass either weights (literal list) or "
                 "weights_df (+ n_buckets)"
             )
-        weights_df = spark.createDataFrame(
-            [(i, int(x)) for i, x in enumerate(weights)], "bucket bigint, w bigint"
+        weights_df = local_frame(
+            spark, [(i, int(x)) for i, x in enumerate(weights)], "bucket bigint, w bigint"
         )
         n_buckets = len(weights)
     elif n_buckets is None:

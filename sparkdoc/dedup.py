@@ -27,6 +27,7 @@ from sparkdoc.identity import (
     digit_signature_udf,
     node_id as _node_id,
 )
+from sparkdoc.session import local_frame
 
 
 from functools import lru_cache
@@ -350,9 +351,7 @@ def enforce_cardinality_bounds(
         return nodes, nodes.limit(0).withColumn("_rank", F.lit(0))
     spark = nodes.sparkSession
     bounds_df = F.broadcast(
-        spark.createDataFrame(
-            [(k, v) for k, v in bounds.items()], f"{class_col} string, _bound int"
-        )
+        local_frame(spark, list(bounds.items()), f"{class_col} string, _bound int")
     )
     richness = F.size(F.filter(F.map_values("attrs"), lambda v: (v.isNotNull()) & (v != "")))
     weight = F.coalesce(F.size("chunk_ids"), F.lit(0)) if "chunk_ids" in nodes.columns else F.lit(0)

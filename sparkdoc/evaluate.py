@@ -54,6 +54,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparkdoc.session import local_frame
+
 # Separator between ordered id-field values inside a key. Canonical values are
 # [a-z0-9]-only, so the separator can never occur in a value.
 KEY_SEP = "\x01"
@@ -99,7 +101,7 @@ def _id_fields_df(spark, id_fields: dict[str, list[str]]):
     if not rows:
         raise ValueError("id_fields must map at least one class to a non-empty field list")
     return F.broadcast(
-        spark.createDataFrame(rows, "class string, field string, pos int")
+        local_frame(spark, rows, "class string, field string, pos int")
     )
 
 

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparkdoc.catalog import DEMO_TEMPLATE, NodeCatalog, build_node_catalog
+from sparkdoc.session import local_frame
 
 COVERAGE_TOKEN_SHARE = 0.10  # orchestrator.py:74-90
 COVERAGE_GROWTH_CAP = 2  # per-path growth cap (missed paths exempt)
@@ -81,7 +82,7 @@ def discover_entities(chunks: DataFrame, catalog: NodeCatalog, coverage: bool = 
             )
         )
     if not parts:
-        return chunks.sparkSession.createDataFrame([], _entities_schema())
+        return local_frame(chunks.sparkSession, [], _entities_schema())
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -510,8 +511,10 @@ def build_catalog_edges(nodes: DataFrame, entities: DataFrame, catalog: NodeCata
             edge_parts.append(refs)
 
     if not edge_parts:
-        return nodes.sparkSession.createDataFrame(
-            [], "doc_id string, src string, dst string, label string, props map<string,string>"
+        return local_frame(
+            nodes.sparkSession,
+            [],
+            "doc_id string, src string, dst string, label string, props map<string,string>",
         )
     out = edge_parts[0]
     for p in edge_parts[1:]:

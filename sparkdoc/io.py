@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparkdoc.session import local_frame
+
 
 # --- driver-side artifacts on the DATA filesystem ----------------------------
 #
@@ -327,7 +329,7 @@ def export_cypher(nodes: DataFrame, edges: DataFrame, out_path: str, merge: bool
         ).alias("stmt")
     )
     spark = nodes.sparkSession
-    header = spark.createDataFrame([(s,) for s in constraints], "stmt string")
+    header = local_frame(spark, [(s,) for s in constraints], "stmt string")
     header.unionByName(node_stmts).unionByName(edge_stmts).coalesce(1).write.mode(
         "overwrite"
     ).text(out_path)

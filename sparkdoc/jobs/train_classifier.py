@@ -55,7 +55,7 @@ def main() -> None:
 
     from sparkdoc.classifier import quantize_weights, score_quantized, train_logreg
     from sparkdoc.io import write_text_file
-    from sparkdoc.session import get_spark
+    from sparkdoc.session import get_spark, local_frame
 
     spark = get_spark(
         "sparkdoc-train-classifier",
@@ -103,9 +103,7 @@ def main() -> None:
     )
     labeled.unpersist()
 
-    wdf = spark.createDataFrame(
-        [(i, int(x)) for i, x in enumerate(wi)], "bucket bigint, w bigint"
-    )
+    wdf = local_frame(spark, [(i, int(x)) for i, x in enumerate(wi)], "bucket bigint, w bigint")
     wdf.coalesce(1).write.mode("overwrite").parquet(os.path.join(args.out, "weights"))
     manifest = {
         "bias": bi,

@@ -25,6 +25,8 @@ import pandas as pd  # noqa: F401 — pandas_udf type hints resolve against modu
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparkdoc.session import local_frame
+
 _SENT_RE = re.compile(r"(?<=[.!?])\s+")
 
 
@@ -471,8 +473,10 @@ def merge_graphs_policy(
     else:
         # same schema as the real audit — the output contract must not flip
         # column names with the skolemize flag
-        skolemized = inputs[0][0].sparkSession.createDataFrame(
-            [], "original_id string, skolemized_id string, document_id string, input_index int"
+        skolemized = local_frame(
+            inputs[0][0].sparkSession,
+            [],
+            "original_id string, skolemized_id string, document_id string, input_index int",
         )
 
     all_nodes = tagged_n[0]

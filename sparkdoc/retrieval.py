@@ -32,6 +32,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparkdoc.session import local_frame
 from sparkdoc.textops import word_count, words
 
 #: micro-unit scale for the integer score quantization
@@ -250,9 +251,7 @@ def _bm25_contrib_score_topk(
         "term", "doc_id", contrib.alias("c_e6")
     )
     spark = pp.sparkSession
-    fan = spark.createDataFrame(
-        qs.fan_pairs, f"query_id {qs.qid_type}, set_id {qs.qid_type}"
-    )
+    fan = local_frame(spark, qs.fan_pairs, f"query_id {qs.qid_type}, set_id {qs.qid_type}")
     agg = _score_sets(cpd, qs, k)
     w = Window.partitionBy("set_id").orderBy(
         F.col("score_e6").desc(), F.col("doc_id").asc()
@@ -384,8 +383,8 @@ def _score_sets(cpd: DataFrame, qs: _QuerySets, k: int) -> DataFrame:
 def _score_sets_sql(cpd: DataFrame, qs: _QuerySets) -> DataFrame:
     """The equi-join + BIGINT-sum formulation — the semantic reference for
     `_score_sets` and the path for non-bigint id types."""
-    set_terms = cpd.sparkSession.createDataFrame(
-        qs.set_pairs, f"set_id {qs.qid_type}, term string"
+    set_terms = local_frame(
+        cpd.sparkSession, qs.set_pairs, f"set_id {qs.qid_type}, term string"
     )
     return (
         cpd.join(F.broadcast(set_terms), "term")
@@ -432,7 +431,7 @@ def _query_sets_collected(qterms: DataFrame) -> _QuerySets:
 
 
 def _literal_terms_df(spark, qs: _QuerySets) -> DataFrame:
-    return spark.createDataFrame([(t,) for t in qs.terms], "term string")
+    return local_frame(spark, [(t,) for t in qs.terms], "term string")
 
 
 def _term_bucket_expr(term: Column, n_buckets: int) -> Column:

@@ -9,12 +9,42 @@ and overridable via env for cluster runs.
 from __future__ import annotations
 
 import os
+from typing import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """Driver-local rows (tuples in ``schema`` field order) → DataFrame.
+
+    The ONE way the engine builds a frame from data already in driver
+    memory. ``spark.createDataFrame(<python list>, schema)`` goes through
+    ``parallelize`` → ``applySchemaToPythonRDD``, so even a one-row frame
+    launches a Python-worker task when an action touches it (~1 s per
+    manifest or params write in the commit loop). An Arrow table is shipped
+    to the JVM as a local relation and runs no Python at all.
+
+    ``schema`` is a StructType or a DDL string; the result's schema equals
+    it exactly, nullability included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparkdoc.session import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -113,7 +115,7 @@ def brute_force_topk(
     )
     if not qids:
         return (
-            spark.createDataFrame([], out_schema)
+            local_frame(spark, [], out_schema)
             .select("query_id", "neighbor_id", F.lit(0).alias("rank"), "cos")
         )
 
@@ -539,8 +541,8 @@ def ivf_assign(
 
     spark = corpus.sparkSession
     centroids = F.broadcast(
-        spark.createDataFrame(
-            [(c, centroid(c)) for c in range(n_cells)], "cell int, cvec array<double>"
+        local_frame(
+            spark, [(c, centroid(c)) for c in range(n_cells)], "cell int, cvec array<double>"
         )
     )
     c = corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))

@@ -8,6 +8,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sparkdoc.schemas import ENTITIES, METRICS
+from sparkdoc.session import local_frame
+
 
 def test_run_resumable_and_resume(spark, tmp_path):
     from sparkdoc.checkpoint import completed_buckets, run_resumable
@@ -274,3 +277,168 @@ def test_corrupt_run_params_refuses_resume(spark, tmp_path):
                 fh.write("{ not json")
     with pytest.raises(Exception, match="unreadable|corrupt|_corrupt"):
         _check_or_record_params(spark, out, n_buckets=8, chunk=True)
+
+
+def _capture_local_frames(monkeypatch):
+    """Record every frame checkpoint builds through local_frame."""
+    import sparkdoc.checkpoint as ckpt
+
+    built = []
+    real = ckpt.local_frame
+
+    def spy(spark, rows, schema):
+        df = real(spark, rows, schema)
+        built.append(df)
+        return df
+
+    monkeypatch.setattr(ckpt, "local_frame", spy)
+    return built
+
+
+def test_manifest_frame_schema_is_metrics(spark, tmp_path, monkeypatch):
+    """The manifest rows keep the METRICS schema exactly, nullability
+    included, and land in the committed manifest unchanged."""
+    from sparkdoc.checkpoint import commit_bucket_group, manifest_path
+
+    built = _capture_local_frames(monkeypatch)
+    rows = [
+        {"bucket": 0, "n_docs": 3, "n_spans": 40, "n_chunks": 5, "wall_ms": 12,
+         "commit_seq": 0, "fmt_counts": '{"pdf":3}'},
+        {"bucket": 1, "n_docs": 0, "n_spans": 0, "wall_ms": 12, "commit_seq": 0},
+    ]
+    out = str(tmp_path / "out")
+    commit_bucket_group(spark, out, "job1", rows)
+    assert len(built) == 1 and built[0].schema == METRICS
+    got = sorted(
+        tuple(r) for r in spark.read.schema(METRICS).parquet(manifest_path(out)).collect()
+    )
+    assert got == [("job1", 0, 3, 40, 5, 12, 0, '{"pdf":3}'), ("job1", 1, 0, 0, 0, 12, 0, "")]
+
+
+def test_run_params_file_bytes_unchanged(spark, tmp_path):
+    from sparkdoc.checkpoint import _check_or_record_params, _params_path
+
+    out = str(tmp_path / "run")
+    _check_or_record_params(spark, out, n_buckets=4, chunk=True)
+    pdir = _params_path(out)
+    parts = [f for f in os.listdir(pdir) if f.endswith(".json")]
+    assert len(parts) == 1
+    with open(os.path.join(pdir, parts[0]), "rb") as fh:
+        assert fh.read() == b'{"n_buckets":4,"chunk":true}\n'
+
+
+def test_resume_out_dir_committed_by_list_built_frames(spark, tmp_path, monkeypatch):
+    """An out_dir whose params and manifest were written through Python-list
+    frames (the pre-Arrow writers) resumes with nothing reprocessed."""
+    import sparkdoc.checkpoint as ckpt
+    from sparkdoc.synth import raw_nodes_df
+
+    out = str(tmp_path / "old")
+    raw = raw_nodes_df(spark, 24, 5, partitions=2)
+    # the former params writer: JSON text → from_json → json file
+    spark.createDataFrame([(json.dumps({"n_buckets": 4, "chunk": True}),)], "v string").selectExpr(
+        "from_json(v, 'n_buckets int, chunk boolean') as p"
+    ).select("p.*").coalesce(1).write.mode("overwrite").json(ckpt._params_path(out))
+    # the former manifest writer: createDataFrame over a Python list
+    with monkeypatch.context() as m:
+        m.setattr(ckpt, "local_frame", lambda s, rows, schema: s.createDataFrame(list(rows), schema))
+        first = ckpt.run_resumable(spark, raw, out, n_buckets=4, group_size=2)
+    assert sorted(first["buckets_processed"]) == [0, 1, 2, 3]
+    again = ckpt.run_resumable(spark, raw, out, n_buckets=4, group_size=2)
+    assert again["buckets_processed"] == []
+    assert sorted(again["buckets_skipped"]) == [0, 1, 2, 3]
+
+
+def test_manifest_wall_ms_counts_the_parse_once(spark, tmp_path, monkeypatch):
+    """wall_ms = the group's parse + its write/commit: a single-group run
+    (no prefetch pool) must not also count the parse in the loop timer."""
+    import time
+
+    import sparkdoc.checkpoint as ckpt
+    import sparkdoc.spans as spans_mod
+    from sparkdoc.synth import raw_nodes_df
+
+    delay_s = 3.0
+    real = spans_mod.extract_documents
+
+    class SlowCount:
+        """The group's documents frame with a parse that takes delay_s."""
+
+        def __init__(self, df):
+            self._df = df
+
+        def persist(self):
+            self._df = self._df.persist()
+            return self
+
+        def count(self):
+            time.sleep(delay_s)
+            return self._df.count()
+
+        def __getattr__(self, name):
+            return getattr(self._df, name)
+
+    monkeypatch.setattr(spans_mod, "extract_documents", lambda raw: SlowCount(real(raw)))
+    out = str(tmp_path / "wall")
+    t0 = time.monotonic()
+    ckpt.run_resumable(spark, raw_nodes_df(spark, 12, 5, partitions=2), out,
+                       n_buckets=2, group_size=2, chunk=False)
+    total_ms = (time.monotonic() - t0) * 1000
+    walls = {r["wall_ms"] for r in spark.read.schema(METRICS).parquet(ckpt.manifest_path(out)).collect()}
+    assert len(walls) == 1
+    wall_ms = walls.pop()
+    assert delay_s * 1000 <= wall_ms <= total_ms
+
+
+# --------------------------------------------------------------------------
+# session.local_frame, the builder behind the ledger frames: round-trips
+# against the Python-list path
+# --------------------------------------------------------------------------
+
+LF_DDL = "id string, m map<string,string>, v array<double>, n bigint, ok boolean"
+LF_ROWS = [
+    ("a", {"k": "v", "x": None}, [1.0, -2.5, float("inf")], 2**40, True),
+    ("b", None, None, None, None),
+    ("c", {}, [], 0, False),
+    ("naïve ΣΟΦΟΣ", {"ü": "ñ"}, [0.1], -1, True),
+]
+
+
+def _lf_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=lambda r: r[0])
+
+
+def test_local_frame_round_trip_matches_list_path(spark):
+    got = local_frame(spark, LF_ROWS, LF_DDL)
+    ref = spark.createDataFrame(LF_ROWS, LF_DDL)
+    assert got.schema == ref.schema
+    assert _lf_rows(got) == _lf_rows(ref)
+
+
+@pytest.mark.parametrize("schema", [LF_DDL, METRICS, ENTITIES, "v string"])
+def test_local_frame_empty_rows_keep_schema(spark, schema):
+    df = local_frame(spark, [], schema)
+    ref = spark.createDataFrame([], schema)
+    assert df.schema == ref.schema
+    assert df.count() == 0
+    # an empty frame still unions with the typed frames it stands in for
+    assert df.unionByName(ref).count() == 0
+
+
+def test_local_frame_struct_schema_nullability_kept(spark):
+    df = local_frame(spark, [("j", 1, 2, 3, 4, 5, 6, None)], METRICS)
+    assert df.schema == METRICS
+    assert [f.nullable for f in df.schema] == [f.nullable for f in METRICS]
+    assert df.collect()[0]["fmt_counts"] is None
+
+
+def test_local_frame_accepts_generators_and_numpy_scalars(spark):
+    import numpy as np
+
+    df = local_frame(spark, ((np.int64(i), float(i) / 2) for i in range(3)), "bucket bigint, w double")
+    assert _lf_rows(df) == [(0, 0.0), (1, 0.5), (2, 1.0)]
+
+
+def test_local_frame_type_mismatch_raises(spark):
+    with pytest.raises(Exception):
+        local_frame(spark, [("not an int",)], "n int")

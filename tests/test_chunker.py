@@ -9,6 +9,10 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
+from hypothesis import given, settings, strategies as st
+
+import sparkdoc.chunker as chunker_mod
 from sparkdoc.chunker import (
     DEFAULT_MAX_TOKENS,
     chunk_spans,
@@ -286,3 +290,151 @@ def test_first_mile_heading_levels_nest_end_to_end(spark):
     ]
     # enriched text leads with the full nested trail
     assert chunks[2]["text"].startswith("Title\nSection\nSubsection")
+
+
+# --------------------------------------------------------------------------
+# token_count is summed from the units' counts, never re-tokenized: it must
+# still equal a fresh count of the emitted text on every corpus shape
+# --------------------------------------------------------------------------
+
+#: Greek sigma in every position (final-sigma lowering), combining marks,
+#: dotted capital I (lowers to two code points), Unicode line/paragraph
+#: separators, NBSP, ideographic and RTL text, emoji and punctuation
+_HOSTILE = [
+    "ΟΔΥΣΣΕΥΣ ΣΟΦΟΣ Σ",
+    "ΑΣ\nΒΣ.",
+    "écolé café ñö",
+    "́̂ leading combining marks",
+    "İstanbul İİ IJsselmeer",
+    "line one line two para\u0085next",
+    "non breaking　space",
+    "中文文本，标点。日本語のテキスト",
+    "עברית ومرحبا بالعالم",
+    "emoji 🎉🎉 mixed-case ΣΊΣΥΦΟΣ.",
+    "x" * 300,
+    "",
+    "   ",
+]
+
+_TOKENIZERS = ["vocab", "regex"]
+
+
+@pytest.fixture(params=_TOKENIZERS)
+def tokenizer(request, monkeypatch):
+    """Run the property under the vendored WordPiece vocab and under the
+    regex fallback used when the vocab is missing."""
+    if request.param == "regex":
+        monkeypatch.setattr(chunker_mod, "_tokenizer", lambda: None)
+    else:
+        assert chunker_mod._tokenizer() is not None
+    return request.param
+
+
+def _assert_counts_exact(spans, **kw):
+    chunks = chunk_spans(spans, **kw)
+    for c in chunks:
+        assert c["token_count"] == count_tokens(c["text"]), c
+    return chunks
+
+
+def _hostile_doc(headings: bool = True):
+    spans = []
+    for i, t in enumerate(_HOSTILE):
+        if headings and i % 4 == 0:
+            spans.append(span("heading", "#" * (1 + i % 3) + " " + t, len(spans)))
+        spans.append(span(["text", "list", "caption", "table"][i % 4], t, len(spans)))
+        if i % 5 == 0:
+            spans.append(span("picture", "", len(spans), f"#/pictures/{i}"))
+    return spans
+
+
+def test_token_count_exact_layout_corpus(tokenizer):
+    from sparkdoc.golden import extract_corpus_golden
+    from sparkdoc.synth import synth_corpus
+
+    docs = extract_corpus_golden(synth_corpus(60, 11))
+    n = 0
+    for spans in docs.values():
+        for max_tokens in (DEFAULT_MAX_TOKENS, 40):
+            n += len(_assert_counts_exact(spans, max_tokens=max_tokens))
+    assert n > 100
+
+
+def test_token_count_exact_mixed_corpus(tokenizer):
+    from collections import defaultdict
+
+    from sparkdoc.synth import expected_mixed_spans
+
+    by_doc = defaultdict(list)
+    for r in expected_mixed_spans(96, 11):
+        by_doc[r["doc_id"]].append(r)
+    n = 0
+    for spans in by_doc.values():
+        for max_tokens in (DEFAULT_MAX_TOKENS, 24):
+            n += len(_assert_counts_exact(spans, max_tokens=max_tokens))
+    assert n > 50
+
+
+def test_token_count_exact_hostile_unicode(tokenizer):
+    for max_tokens in (DEFAULT_MAX_TOKENS, 16, 8):
+        _assert_counts_exact(_hostile_doc(), max_tokens=max_tokens)
+        _assert_counts_exact(_hostile_doc(headings=False), max_tokens=max_tokens)
+    # a final sigma on either side of a trail/body join
+    spans = [span("heading", "# ΑΣ", 0), span("text", "ΣΑ ΟΣ", 1), span("text", "Σ", 2)]
+    _assert_counts_exact(spans)
+
+
+def test_token_count_exact_resplit_pictures_serializer(tokenizer):
+    # oversize spans under a heading trail: sentence, word and char splits
+    long_text = " ".join(f"Sentence {i} has ΣΟΦΟΣ words." for i in range(60))
+    spans = [
+        span("heading", "# Trail ΟΔΟΣ", 0),
+        span("text", long_text, 1),
+        span("text", "tok" * 200, 2),
+        span("text", "a\nb\n\nc " * 40, 3),
+    ]
+    chunks = _assert_counts_exact(spans, max_tokens=20)
+    assert any(c["resplit_of"] is not None for c in chunks)
+    # picture-only documents, with and without a heading trail
+    pics = [span("picture", "", 0, "#/pictures/0"), span("picture", "", 1, "#/pictures/1")]
+    for doc in (pics, [span("heading", "# Gallery Σ", 2)] + pics):
+        chunks = _assert_counts_exact(doc)
+        assert chunks and chunks[-1]["doc_item_refs"]
+    # the serializer slot renders text the span does not carry
+    def serializer(s):
+        return f"[{s['kind'].upper()}] {s['text']} ΤΕΛΟΣ end"
+
+    _assert_counts_exact(_hostile_doc(), serializer=serializer)
+    _assert_counts_exact(_hostile_doc(), max_tokens=12, serializer=serializer)
+
+
+_hostile_text = st.text(
+    alphabet=st.sampled_from(
+        list("abcXYZ019 .,!?\n\t#|") + ["Σ", "σ", "ς", "İ", "́", "̈", " ",
+                                          " ", " ", "中", "ß", "ﬁ", "🎉", "_"]
+    ),
+    max_size=60,
+)
+_hostile_span = st.builds(
+    dict,
+    kind=st.sampled_from(["text", "list", "caption", "table", "heading", "picture", "page_break"]),
+    text=_hostile_text,
+    media_ref=st.just(""),
+)
+
+
+@pytest.mark.parametrize("tok", _TOKENIZERS)
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_hostile_span, max_size=25), st.integers(min_value=8, max_value=80))
+def test_token_count_exact_property(tok, spans, max_tokens):
+    spans = [dict(s, offset=i) for i, s in enumerate(spans)]
+    for s in spans:
+        if s["kind"] == "heading":
+            s["text"] = "#" * (1 + len(s["text"]) % 3) + " " + s["text"]
+    saved = chunker_mod._tokenizer
+    if tok == "regex":
+        chunker_mod._tokenizer = lambda: None
+    try:
+        _assert_counts_exact(spans, max_tokens=max_tokens)
+    finally:
+        chunker_mod._tokenizer = saved
